@@ -1,5 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Bench-record formatting, factored out of the main so specs can pin the
   * driver-contract constraint: the parse-target stdout line must fit the
@@ -17,7 +19,13 @@ object BenchFormat {
     * (query numbers never repeat); formatCompact asserts it anyway. */
   def shortKey(name: String): String = name.takeWhile(_ != '_')
 
-  private def fmt(v: Double, scale: Int): String =
+  /** "data/sf0.1/" -> Some("sf0.1"): the sf a directory names. */
+  def sfName(sfDir: String): Option[String] =
+    sfDir.split('/').filter(_.nonEmpty).lastOption
+
+  /** Locale-safe fixed-point rendering (HALF_UP) for JSON numbers: an
+    * f"%.3f" would print a comma under a comma-decimal default locale. */
+  def fmt(v: Double, scale: Int): String =
     BigDecimal(v).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toString
 
   /** Full-precision, full-name record: first stdout line + target/bench.json.
@@ -103,7 +111,7 @@ object BenchFormat {
       flag2x: Option[Seq[String]] = None): String = {
     val keys = results.map { case (k, _) => shortKey(k) }
     require(keys.distinct.size == keys.size, "short query keys collide")
-    val sf = sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse(sfDir)
+    val sf = sfName(sfDir).getOrElse(sfDir)
     val rr = if (reruns == 0) "" else s""","rr":$reruns"""
     val fl = if (failed == 0) "" else s""","failed":$failed"""
     val ctl = if (ctlFactors.isEmpty) ""
@@ -203,28 +211,14 @@ object BenchAdjudicate {
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(graft.plans.GraftExtensions.install)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // codegen class cache: the default 100 entries thrashes under a
-      // 405-query suite (every query recompiles its generated code each
-      // pass — janino compilation, not query work); any production
-      // deployment with a diverse query mix raises this the same way.
-      // Static conf: must be set at FIRST session build.
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Graft.defaultCores.toString
+    val spark = Graft.localSession("bench")
     // JVM/codegen warm-up so the alphabetically-first query doesn't absorb
     // one-time JIT + classloading cost (~5 s) into its measurement
     spark.range(100000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
     try SparkEntry.queries("q19_count")(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     // Structured Streaming machinery warm-up (state store provider, commit
     // log, micro-batch planner classloading — otherwise the first streaming
     // gate absorbs several seconds of one-time cost)
@@ -238,7 +232,7 @@ object Bench {
         .writeStream.format("memory").queryName("__bench_warm")
         .outputMode("complete").start()
       q.processAllAvailable(); q.stop()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     // Per-query MIN of N runs, DEFAULT 2 (round-11 lesson: the single-rep
     // driver artifact posted 100-200x on byte-identical trivial queries
     // under co-tenant contention — min-of-2 is the same discipline
@@ -263,7 +257,7 @@ object Bench {
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable => System.err.println(s"[bench] $name: $e"); false }
+        catch { case NonFatal(e) => System.err.println(s"[bench] $name: $e"); false }
       ((System.nanoTime() - t0) / 1e9, ok)
     }
     val queries = SparkEntry.selectedQueries().sortBy(_._1)
@@ -304,24 +298,21 @@ object Bench {
     // first readings. Sub-second readings are never re-run: they cannot
     // distort the total and the 3x trigger would fire on scheduler jitter.
     val canonicalPath = sys.env.getOrElse("SPARK_GRAFT_CANONICAL", "BASELINE_CANONICAL.json")
-    val canonical: Map[String, Double] =
-      try {
-        val root = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(new java.io.File(canonicalPath))
-        // the canonical numbers are sf-specific — comparing an sf0.01
-        // smoke against sf0.1 references would mis-trigger (or worse,
-        // mask) the guard
-        val canonSf = Option(root.get("sf")).map(_.asText).getOrElse("")
-        if (!sfDir.split('/').filter(_.nonEmpty).lastOption.contains(canonSf))
-          Map.empty[String, Double]
-        else {
-          val node = root.get("queries")
-          val it = node.fields()
-          val b = Map.newBuilder[String, Double]
-          while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asDouble }
-          b.result()
-        }
-      } catch { case _: Throwable => Map.empty }
+    // ONE read of the canonical record. Its numbers are sf-specific:
+    // comparing an sf0.01 smoke against sf0.1 references would
+    // mis-trigger (or worse, mask) the guard, so the query map is used
+    // only when the declared sf matches; an unreadable record leaves
+    // both the map and the declared sf empty
+    val canonRoot = try Option(new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(new java.io.File(canonicalPath)))
+      catch { case NonFatal(_) => None }
+    val canonSf = canonRoot.flatMap(r => Option(r.get("sf"))).map(_.asText)
+    val sfName = BenchFormat.sfName(sfDir)
+    val canonical: Map[String, Double] = canonRoot
+      .filter(_ => canonSf.exists(sfName.contains))
+      .flatMap(r => Option(r.get("queries")))
+      .fold(Map.empty[String, Double])(_.fields().asScala
+        .map(e => e.getKey -> e.getValue.asDouble).toMap)
     // queries with a MEASURED prior-round co-tenant-burst history get an
     // UNCONDITIONAL extra measurement — effectively min-of-(reps+1), always
     // stamped as adjudicated (r13 close read 2.94× under a 3× trigger, r14
@@ -383,16 +374,10 @@ object Bench {
     // partial runs (SPARK_GRAFT_ONLY subsets) and off-SF rehearsals
     // (sf1 fixtures) must not clobber the tracked full record — it is
     // the DRIVER-config artifact. Decide off the canonical's declared
-    // sf ALONE (parsed independently of the query map), so a corrupt or
-    // missing canonical does not silently stop the artifact from being
-    // written (it only disables the burst guard, which already warns
-    // via the absent rerun lines)
-    val canonSfMatches: Boolean = try {
-      val root = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(new java.io.File(canonicalPath))
-      val cs = Option(root.get("sf")).map(_.asText)
-      cs.forall(s => sfDir.split('/').filter(_.nonEmpty).lastOption.contains(s))
-    } catch { case _: Throwable => true } // unreadable -> can't tell; keep writing
+    // sf ALONE, so a corrupt or missing canonical does not silently stop
+    // the artifact from being written (it only disables the burst guard,
+    // which already warns via the absent rerun lines)
+    val canonSfMatches = canonSf.forall(sfName.contains)
     val fullSuite = sys.env.get("SPARK_GRAFT_ONLY").forall(_.trim.isEmpty) &&
       canonSfMatches
     (Seq(recordPath) ++ (if (fullSuite) Seq("BENCH_FULL.json") else Nil))
@@ -402,7 +387,7 @@ object Bench {
         Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
         java.nio.file.Files.write(p, (fullLine + "\n").getBytes("UTF-8"))
         System.err.println(s"[bench] record written to $rp")
-      } catch { case e: Throwable => System.err.println(s"[bench] record write failed ($rp): $e") }
+      } catch { case NonFatal(e) => System.err.println(s"[bench] record write failed ($rp): $e") }
     }
     // Compact record as the LAST stdout line — the driver's parse target.
     // Short "qNN" keys + 2-decimal values keep it ~1.5 KB at 132 queries,

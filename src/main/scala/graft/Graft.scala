@@ -1316,9 +1316,13 @@ object Graft {
     e
   }
 
-  /** Local session tuned per the build notes: 32 threads, 32 shuffle
-    * partitions (not 200), AQE on for runtime re-planning/skew handling. */
-  def localSession(appName: String = "graft", cores: Int = 32): SparkSession = {
+  /** Local core count: `SPARK_GRAFT_CPUS`, else 32. */
+  def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(32)(_.trim.toInt)
+
+  /** The one session builder every main uses, tuned per the build notes:
+    * `cores` threads, as many shuffle partitions (not 200), AQE on for
+    * runtime re-planning/skew handling. */
+  def localSession(appName: String = "graft", cores: Int = defaultCores): SparkSession = {
     val s = SparkSession.builder()
       .withExtensions(graft.plans.GraftExtensions.install)
       .master(s"local[$cores]")

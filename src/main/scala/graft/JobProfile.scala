@@ -1,6 +1,7 @@
 package graft
 
 import java.util.concurrent.ConcurrentHashMap
+import scala.util.control.NonFatal
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Per-JOB decomposition of a query's wall time — the instrument the
@@ -58,12 +59,12 @@ object JobProfile {
       val fn = SparkEntry.queries(name)
       // warm run (untimed): JIT, codegen cache, parquet footers
       try fn(spark, dir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[prof] warm $name: $e") }
+      catch { case NonFatal(e) => System.err.println(s"[prof] warm $name: $e") }
       jobs.clear(); stageTasks.clear()
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
       try fn(spark, dir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[prof] $name: $e") }
+      catch { case NonFatal(e) => System.err.println(s"[prof] $name: $e") }
       val wallMs = (System.nanoTime() - t0) / 1e6
       // let listener events drain before reading (listenerBus is
       // private[spark]; a short sleep suffices for a profiler)

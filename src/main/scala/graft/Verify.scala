@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -28,23 +30,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(graft.plans.GraftExtensions.install)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // codegen class cache: the default 100 entries thrashes under a
-      // 405-query suite (every query recompiles its generated code each
-      // pass — janino compilation, not query work); any production
-      // deployment with a diverse query mix raises this the same way.
-      // Static conf: must be set at FIRST session build.
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession("verify")
     new java.io.File(outDir).mkdirs()
     val par = sys.env.get("SPARK_GRAFT_VERIFY_PAR").map(_.toInt)
       .getOrElse(4).max(1)
@@ -54,7 +40,7 @@ object Verify {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         System.err.println(f"[verify] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
@@ -72,14 +58,12 @@ object Verify {
       val serialThread = new Thread(() => serial.foreach { case (n, f) =>
         run(n, f) }, "verify-serial-chain")
       serialThread.start()
+      // invokeAll waits for every gate; get() rethrows a fatal error
+      // (`run` catches only NonFatal) instead of leaving the wait hung
       val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val fs = parallel.map { case (n, f) =>
-        scala.concurrent.Future(run(n, f)) }
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(fs),
-        scala.concurrent.duration.Duration.Inf)
+      val tasks = parallel.map { case (n, f) =>
+        (() => run(n, f)): java.util.concurrent.Callable[Unit] }
+      pool.invokeAll(tasks.asJava).forEach(_.get())
       pool.shutdown()
       serialThread.join()
     }

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
+import scala.util.control.NonFatal
 
 /**
  * Column-level function library of the engine. Everything here is built
@@ -71,7 +72,7 @@ object GraftFunctions {
     // unchanged — use [[spread]] for those.
     val parts =
       try df.queryExecution.sparkPlan.execute().getNumPartitions
-      catch { case _: Throwable => target }
+      catch { case NonFatal(_) => target }
     if (parts < target) df.repartition(target) else df
   }
 

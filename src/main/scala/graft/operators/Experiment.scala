@@ -40,13 +40,17 @@ object Experiment {
       sum(when(col("arm") === "B", col("c")).otherwise(0L)).as("conv_b"))
     val (na, nb) = (col("n_a").cast("double"), col("n_b").cast("double"))
     val (ca, cb) = (col("conv_a").cast("double"), col("conv_b").cast("double"))
-    val ra = ca / na
-    val rb = cb / nb
-    val p = (ca + cb) / (na + nb)
+    // NULL on a zero denominator (an empty arm, or a pooled rate of 0 or
+    // 1) — the SQL-engine answer; ANSI Spark would throw DIVIDE_BY_ZERO
+    def div(num: Column, den: Column): Column = when(den =!= 0.0, num / den)
+    val ra = div(ca, na)
+    val rb = div(cb, nb)
+    val p = div(ca + cb, na + nb)
     agg.select(col("n_a"), col("n_b"), col("conv_a"), col("conv_b"),
       round(ra, 6).as("rate_a"), round(rb, 6).as("rate_b"),
       round(rb - ra, 6).as("lift"),
-      round((rb - ra) / sqrt(p * (lit(1.0) - p) * (lit(1.0) / na + lit(1.0) / nb)), 6)
+      round(div(rb - ra,
+        sqrt(p * (lit(1.0) - p) * (div(lit(1.0), na) + div(lit(1.0), nb)))), 6)
         .as("z"))
   }
 
@@ -1957,7 +1961,7 @@ object Experiment {
     val ranked = info.df
       .select(col("rt"), col("__v0").as("v"),
         (lit(2L) * col("c_below") + col("c") + lit(1L)).as("__r2"))
-    val rankedSide = if (info.nDistinct <= 4000000L) broadcast(ranked)
+    val rankedSide = if (info.nDistinct <= DistDrift.BroadcastValueLimit) broadcast(ranked)
       else ranked
     val perItem = r.join(rankedSide, Seq("rt", "v"))
       .groupBy(col("it")).agg(sum(col("__r2")).as("r2"))

@@ -565,7 +565,7 @@ object Dedup {
     * call on this thread (0 = the driver union-find fast path answered;
     * the fused seed round is not counted; the count includes the final
     * no-change confirmation round). Instrumentation only — feeds
-    * [[graft.DensityScale]]'s rounds-vs-n decomposition: at constant
+    * `graft.Rehearse density`'s rounds-vs-n decomposition: at constant
     * density an O(log n) round count with per-round linear cost is the
     * designed shape, and this is the number that proves it. */
   val lastCcRounds = new ThreadLocal[Int] { override def initialValue(): Int = 0 }
@@ -1137,7 +1137,7 @@ object Dedup {
    * label, LSH bucket, k-means) feeds the same core: all-pairs cosine
    * WITHIN each cluster key, never across. Cost is Σ c² over cluster
    * sizes c — constant cluster density ⇒ linear in rows (the
-   * DensityScale-measured regime); `maxCluster` is the loud-contract
+   * `Rehearse density`-measured regime); `maxCluster` is the loud-contract
    * guard against a degenerate assignment. Assignment itself is the
    * caller's stated cost (O(n·k·d) for a k-centroid argmin).
    * Output: (cluster, a, b, cosine ≥ threshold), a < b.

@@ -36,7 +36,7 @@ object EntityMatch {
     * block sizes grow linearly with ANY corpus and pair mass goes
     * quadratic at scale. At 100 TB use prefixLen 3-4: on a
     * diversity-growing corpus the key space grows with the data and
-    * block density stays constant (the DensityScale-measured linear
+    * block density stays constant (the `Rehearse density`-measured linear
     * regime). The recall trade is explicit: a typo INSIDE the prefix
     * escapes the block at any prefixLen > the typo position — the same
     * contract every blocking scheme carries. */

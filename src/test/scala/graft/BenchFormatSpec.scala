@@ -220,6 +220,16 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(withFail.isEmpty)
   }
 
+  test("fmt renders a '.' decimal separator under a comma-decimal locale") {
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try {
+      assert(f"${1.5}%.3f" == "1,500", "the locale under test is not comma-decimal")
+      assert(BenchFormat.fmt(1.5, 3) == "1.500")
+      assert(BenchFormat.fmt(12.345, 2) == "12.35")
+    } finally java.util.Locale.setDefault(saved)
+  }
+
   test("gate invariant: every declared query has an oracle and vice versa " +
       "(a missing entry would silently become a no_oracle driver row)") {
     val q = SparkEntry.queries.keySet

@@ -46,6 +46,19 @@ class ScdSpec extends SparkSpec {
     assert(r == again) // pure function of (salt, id) + exact counts
     assert(math.signum(r.getAs[Double]("z")) ==
       math.signum(r.getAs[Double]("lift")) || r.getAs[Double]("lift") == 0.0)
+    // a pooled rate of 0 or 1 zeroes the z denominator: z is NULL (the
+    // SQL-engine answer), not an ANSI DIVIDE_BY_ZERO
+    Seq(false -> 0.0, true -> 1.0).foreach { case (all, rate) =>
+      val flat = Experiment.abTest((0 until 400).map(i => (i.toLong, all))
+        .toDF("id", "c"), "id", col("c"), salt = "s1").head()
+      assert(flat.getAs[Double]("rate_a") == rate &&
+        flat.getAs[Double]("rate_b") == rate && flat.getAs[Double]("lift") == 0.0)
+      assert(flat.isNullAt(flat.fieldIndex("z")))
+    }
+    // an empty arm (split 1.0 sends every unit to A): its rate is NULL too
+    val oneArm = Experiment.abTest(units, "id", col("c"), "s1", split = 1.0).head()
+    assert(oneArm.getAs[Long]("n_b") == 0L && !oneArm.isNullAt(oneArm.fieldIndex("rate_a")))
+    assert(Seq("rate_b", "lift", "z").forall(c => oneArm.isNullAt(oneArm.fieldIndex(c))))
   }
 
   test("srmCheck: terms replay from published columns; exact partition-free cut") {

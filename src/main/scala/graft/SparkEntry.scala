@@ -179,7 +179,8 @@ object SparkEntry {
       .limit(90)
       .select(col("item_a").as("src"), col("item_b").as("dst"))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  // built once per JVM: every lookup would otherwise rebuild 405 entries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- §2.3 filters / predicates ------------------------------------
     "q01_filter_range" -> ((s, dir) => {
       // loose typing: string literal "45" coerced to DOUBLE (SURVEY §1.2)
@@ -6329,7 +6330,8 @@ object SparkEntry {
           ORDER BY role, node"""
   }
 
-  def oracleSql: Map[String, String] = Map(
+  // built once per JVM, like [[queries]]
+  lazy val oracleSql: Map[String, String] = Map(
     // q298: identical (st, en) sweep — a tied duplicate interval gets
     // nw=0 at the later position whichever engine orders it first, so
     // islands agree; touching intervals merge (st > pm strictly opens)

@@ -44,11 +44,12 @@ object Association {
     // first pair join each re-ran the upstream join+distinct (measured:
     // three ~10-task-second stages per q207 run)
     val __bstats = bi.groupBy(col("b")).agg(count(lit(1)).as("sz"))
-      .agg(count(lit(1)), max(col("sz"))).head()
+      .agg(count(lit(1)), max(col("sz")), max_by(col("b"), col("sz"))).head()
     val nBaskets = __bstats.getLong(0)
     val __maxSz = if (__bstats.isNullAt(1)) 0L else __bstats.getLong(1)
     require(__maxSz <= maxItemsPerBasket,
-      s"densest basket holds ${__maxSz} items > maxItemsPerBasket=$maxItemsPerBasket")
+      s"densest basket ${__bstats.get(2)} holds ${__maxSz} items > " +
+        s"maxItemsPerBasket=$maxItemsPerBasket")
     val singles = bi.groupBy(col("i")).agg(count(lit(1)).as("supp"))
     val l = bi.select(col("b"), col("i").as("item_a"))
     val r = bi.select(col("b"), col("i").as("item_b"))
@@ -125,11 +126,12 @@ object Association {
     // first pair join each re-ran the upstream join+distinct (measured:
     // three ~10-task-second stages per q207 run)
     val __bstats = bi.groupBy(col("b")).agg(count(lit(1)).as("sz"))
-      .agg(count(lit(1)), max(col("sz"))).head()
+      .agg(count(lit(1)), max(col("sz")), max_by(col("b"), col("sz"))).head()
     val nBaskets = __bstats.getLong(0)
     val __maxSz = if (__bstats.isNullAt(1)) 0L else __bstats.getLong(1)
     require(__maxSz <= maxItemsPerBasket,
-      s"densest basket holds ${__maxSz} items > maxItemsPerBasket=$maxItemsPerBasket")
+      s"densest basket ${__bstats.get(2)} holds ${__maxSz} items > " +
+        s"maxItemsPerBasket=$maxItemsPerBasket")
     val singles = bi.groupBy(col("i")).agg(count(lit(1)).as("supp"))
     // the per-basket pair relation feeds BOTH the support floor and the
     // third-item extension — materialize it once (guarded-quadratic size,

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions.{kcol, kexp}
 
 /**
  * Distribution drift between two table versions — the ML-monitoring
@@ -45,8 +46,8 @@ object DistDrift {
     * `totals` = the grand total of every count column (= the final
     * prefix accumulator). Surfacing them lets callers drop their own
     * count/total probe jobs (rankSums' tie rollup, yuenT's per-group
-    * n, spearman's long-path election) — the round-17 job-count cut. */
-  private[operators] case class PrefixSums(df: DataFrame, nDistinct: Long,
+    * n) — the round-17 job-count cut. */
+  private[graft] case class PrefixSums(df: DataFrame, nDistinct: Long,
     totals: Map[String, Long],
     perGroupTotals: Map[Seq[Any], Map[String, Long]] = Map.empty)
 
@@ -59,19 +60,20 @@ object DistDrift {
     * grand totals (see [[PrefixSums]]). `knownBounds` skips the min/max
     * stats job when the caller already knows a COVERING value range
     * (bounds only shape the internal buckets — any covering range is
-    * correct; the oracle never sees them). `groupCols` (string-typed)
+    * correct; the oracle never sees them). `groupCols` (any type, null
+    * a group of its own — the `groupBy` semantics of the bucket totals)
     * generalizes the scan to per-group prefix sums in the SAME pass:
     * buckets partition by (group, bucket), offsets cumulate per group
     * on the driver (≤ groups × buckets rows collected), and `<c>_below`
     * becomes Σ of `c` over smaller `v` WITHIN the row's group — one
     * bucket job for all of kendallW's raters where the old shape ran
     * one full pass per rater. */
-  private[operators] def withPrefixSumsInfo(perValue: DataFrame,
+  private[graft] def withPrefixSumsInfo(perValue: DataFrame,
       cnts: Seq[String], keepBucket: Boolean = false,
       knownBounds: Option[(Double, Double)] = None,
       groupCols: Seq[String] = Nil): PrefixSums = {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
     val spark = perValue.sparkSession
     val (mn, mx) = knownBounds.getOrElse {
       val stats = perValue.where(col("v").isNotNull)
@@ -112,9 +114,13 @@ object DistDrift {
       }
       Row.fromSeq(key ++ (r.getInt(g) +: offs))
     }
+    // offsets carry the group keys under their own names and types, and
+    // join null-safely: a null group is a group of the bucket totals
+    val offKeys = groupCols.indices.map(i => s"__og_$i") :+ "__ob"
     val offSchema = StructType(
-      groupCols.map(StructField(_, StringType, nullable = true)) ++
-      (StructField("__b", IntegerType, nullable = false) +:
+      groupCols.zip(offKeys).map { case (c, k) =>
+        StructField(k, perValue.schema(c).dataType, nullable = true) } ++
+      (StructField("__ob", IntegerType, nullable = false) +:
         cnts.map(c => StructField(s"__off_$c", LongType, nullable = false))))
     val offDf = spark.createDataFrame(
       java.util.Arrays.asList(offRows: _*), offSchema)
@@ -123,8 +129,14 @@ object DistDrift {
     val withLocal = cnts.foldLeft(bucketed) { (d, c) =>
       d.withColumn(s"__wb_$c", coalesce(sum(col(c)).over(wIn), lit(0L)))
     }
-    val joined = cnts.foldLeft(
-        withLocal.join(broadcast(offDf), keyCols)) { (d, c) =>
+    val onKeys = groupCols.zip(offKeys)
+      .foldLeft(col("__b") === col("__ob")) { case (e, (c, k)) =>
+        e && (col(c) <=> col(k)) }
+    // the USING join's column order: keys, then the rest of each side
+    val outCols = keyCols ++ withLocal.columns.filterNot(keyCols.contains) ++
+      cnts.map(c => s"__off_$c")
+    val joined = cnts.foldLeft(withLocal.join(broadcast(offDf), onKeys)
+        .select(outCols.map(col): _*)) { (d, c) =>
       d.withColumn(s"${c}_below", col(s"__wb_$c") + col(s"__off_$c"))
     }
     PrefixSums(joined.drop((if (keepBucket) Nil else Seq("__b")) ++
@@ -467,58 +479,45 @@ object DistDrift {
    * no per-row ranking — rows meet their rank by a value-keyed join.
    * With A = 2·rank̄ all moments are exact integers (ΣA = n(n+1) always):
    * ρ = (ΣAxAy − n(n+1)²) / √(ΣAx²−n(n+1)²)·√(ΣAy²−n(n+1)²) — sums in
-   * DECIMAL(38,0) (exact to n ≈ 10⁴ trillion rows; A·A ≤ 4n²), doubles
-   * only in the final ratio with the two sqrts taken separately (the
-   * q244 overflow doctrine). Output: one row (n, rho), 6dp.
+   * [[graft.expr.VecOuterAgg]]'s exact DECIMAL(38,0) cells (A·A ≤ 4n²,
+   * so every sum ≤ 4n³ fits 38 digits to n ≈ 2.9·10¹² rows; past them
+   * the pass throws, never wraps), doubles only in the final ratio with
+   * the two sqrts taken separately (the q244 overflow doctrine).
+   * Output: one row (n, rho), 6dp.
    */
-  def spearman(df: DataFrame, xCol: Column, yCol: Column,
-      forceDecimalPath: Boolean = false): DataFrame = {
-    // forceDecimalPath: spec hook ONLY — pins the long moment path
-    // byte-equal to the decimal path on the same data.
+  def spearman(df: DataFrame, xCol: Column, yCol: Column): DataFrame = {
     // (A cache + broadcast-rank + fanOut variant was measured SLOWER
     // here — two serial broadcast builds plus the cache/checkpoint
     // materialization cost more than the shuffle joins they replaced;
-    // reverted. The keepers are the fused stats probe and the
-    // probe-gated long moment path.)
+    // reverted. The keeper is the fused stats probe.)
     val subj = df.select(xCol.cast("double").as("x"), yCol.cast("double").as("y"))
       .where(col("x").isNotNull && col("y").isNotNull)
-    // ONE fused probe: n for the long-path election + both axes' bucket
-    // bounds (previously two separate stats jobs inside the two prefix
-    // passes, and no n at all)
-    val stats = subj.agg(count(lit(1)), min(col("x")), max(col("x")),
+    // ONE fused probe: both axes' bucket bounds (previously two separate
+    // stats jobs inside the two prefix passes)
+    val stats = subj.agg(min(col("x")), max(col("x")),
       min(col("y")), max(col("y"))).head()
-    val n = stats.getLong(0)
     def bounds(i: Int): Option[(Double, Double)] =
       if (stats.isNullAt(i)) Some((0.0, 0.0))
       else Some((stats.getDouble(i), stats.getDouble(i + 1)))
-    // doubled ranks satisfy A ≤ 2n, so every product ≤ 4n² and the
-    // moment sums ≤ 4n³ — exact LONGs (codegen sum, no BigDecimal per
-    // row) whenever 4n³ < 2⁶² (n ≈ 1.04M; BigInt guard, no wrap on
-    // the probe itself). Identical integers to the DECIMAL(38,0)
-    // sums under the bound → identical published doubles; above it
-    // the decimal path keeps unbounded exactness (the VecOuterAgg /
-    // kmeansLloyd probe-then-choose doctrine).
-    val useLong = !forceDecimalPath &&
-      BigInt(4) * BigInt(n).pow(3) < BigInt(2).pow(62)
     def rankOf(c: String, b: Option[(Double, Double)]): DataFrame = {
       val perValue = subj.groupBy(col(c).as("v")).agg(count(lit(1)).as("t"))
-      val a2 = lit(2L) * col("t_below") + col("t") + 1L
       withPrefixSums(perValue, Seq("t"), knownBounds = b)
         .select(col("v").as(c),
-          (if (useLong) a2 else a2.cast("decimal(38,0)")).as(s"__a_$c"))
+          (lit(2L) * col("t_below") + col("t") + 1L).as(s"__a_$c"))
     }
-    val ranked = subj.join(rankOf("x", bounds(1)), "x")
-      .join(rankOf("y", bounds(3)), "y")
-    val agg = ranked.agg(count(lit(1)).as("n"),
-      sum(col("__a_x") * col("__a_y")).as("sxy"),
-      sum(col("__a_x") * col("__a_x")).as("sx2"),
-      sum(col("__a_y") * col("__a_y")).as("sy2"))
-    val nD = if (useLong) col("n") else col("n").cast("decimal(38,0)")
+    val ranked = subj.join(rankOf("x", bounds(0)), "x")
+      .join(rankOf("y", bounds(2)), "y")
+    // the moments as exact DECIMAL(38,0) cells of the (Ax, Ay) outer
+    // product: 0 = n, 3 = ΣAx², 4 = ΣAxAy, 5 = ΣAy²
+    val mom = ranked.select(kcol(graft.expr.VecOuterAgg(
+        kexp(array(col("__a_x"), col("__a_y"))), 2).toAggregateExpression())
+      .as("__m"))
+    val nD = col("__m")(0)
     val m = nD * (nD + lit(1)) * (nD + lit(1))
-    val num = (col("sxy") - m).cast("double")
-    val dx = (col("sx2") - m).cast("double")
-    val dy = (col("sy2") - m).cast("double")
-    agg.select(col("n"),
+    val num = (col("__m")(4) - m).cast("double")
+    val dx = (col("__m")(3) - m).cast("double")
+    val dy = (col("__m")(5) - m).cast("double")
+    mom.select(nD.cast("long").as("n"),
       when(dx > 0 && dy > 0, round(num / (sqrt(dx) * sqrt(dy)), 6)).as("rho"))
   }
 

@@ -1425,10 +1425,10 @@ object CorpusStats {
    * re-round 12dp after each normalize — so the 8-round iteration is a
    * pure function of the cells and replays verbatim in SQL.
    *
-   * Shape at scale: ONE n·d² explode with map-side combine into d²
-   * cells (`maxDim` keeps it loud; n·d² is the honest cost of an exact
-   * covariance), then everything lives on the d²-bounded relation —
-   * the iteration itself runs on the driver over the collected cells.
+   * Shape at scale: ONE n·d² aggregate pass into d(d+1)/2 exact cells
+   * (`maxDim` keeps it loud; n·d² is the honest cost of an exact
+   * covariance), then everything lives on the d²-bounded cells — the
+   * iteration itself runs on the driver over the collected cells.
    *
    * Output: one row (n, dim, lambda1, trace, top_share), unit² scale,
    * 6dp.
@@ -1439,25 +1439,21 @@ object CorpusStats {
     * centered cells. Returns (n, d, cov). */
   private def covCells(df: DataFrame, vecCol: String, maxDim: Int,
       opName: String): (Long, Int, Array[Array[Double]]) = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
     val qarr = transform(col(vecCol),
       v => round(v.cast("double") * lit(1e6), 0).cast("long"))
     val base = df.where(col(vecCol).isNotNull).select(qarr.as("__q")).cache()
-    // ONE probe job: n + dim bounds + max |q| (the long-fast-path gate).
-    // The dim probe fires on aggregates BEFORE collecting anything
-    // dim-sized. min AND max: a ragged corpus (64-dim rows mixed with
-    // 128-dim after a partial re-embed — exactly the drift this monitor
-    // exists to catch) would otherwise zero-fill the short vectors in
-    // the covariance cells while n counts all rows, silently skewing
+    // ONE probe job: n + dim bounds, checked BEFORE the moment pass.
+    // min AND max: a ragged corpus (64-dim rows mixed with 128-dim after
+    // a partial re-embed — exactly the drift this monitor exists to
+    // catch) would otherwise zero-fill the short vectors in the
+    // covariance cells while n counts all rows, silently skewing
     // λ₁/trace/top_share
     val pr = base.agg(count(lit(1)),
       coalesce(max(size(col("__q"))), lit(0)),
-      coalesce(min(size(col("__q"))), lit(0)),
-      coalesce(max(greatest(array_max(col("__q")),
-        -array_min(col("__q")))), lit(0L))).head()
+      coalesce(min(size(col("__q"))), lit(0))).head()
     val n = pr.getLong(0)
     require(n >= 2, s"$opName: need at least two vectors")
-    val (dProbe, dMin, qAbs) = (pr.getInt(1), pr.getInt(2), pr.getLong(3))
+    val (dProbe, dMin) = (pr.getInt(1), pr.getInt(2))
     require(dProbe <= maxDim,
       s"$opName: dim $dProbe > maxDim=$maxDim — the exact " +
         "covariance is n·d² work; raise the bound deliberately")
@@ -1467,55 +1463,33 @@ object CorpusStats {
         "covariance; re-embed or filter to one dim first")
     require(dProbe >= 1, s"$opName: vectors are empty (dim 0)")
     val d = dProbe
+    val cov = centeredCells(base, "__q", n, d)
+    base.unpersist(false)
+    (n, d, cov)
+  }
+
+  /** Sums and all upper-triangle product cells of the d-long vectors in
+    * `vec` in ONE exact aggregate pass ([[graft.expr.VecOuterAgg]]'s
+    * 128-bit cells are the DECIMAL(38,0) sums), centered as
+    * (n·Σxᵢxⱼ − Σxᵢ·Σxⱼ) / n² in unit² (1e-12 of the micro-unit
+    * integers) and rounded 12dp. The mirror cell is the same value: the
+    * sum over rows of xᵢ·xⱼ IS the sum of xⱼ·xᵢ. */
+  private def centeredCells(base: DataFrame, vec: String, n: Long,
+      d: Int): Array[Array[Double]] = {
     def r12(x: Double): Double =
       BigDecimal(x).setScale(12, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val flat = base.select(kcol(graft.expr.VecOuterAgg(
+        kexp(col(vec)), d).toAggregateExpression()).as("m"))
+      .head().getSeq[java.math.BigDecimal](0).map(BigDecimal(_))
     val nD = n.toDouble
     val cov = Array.ofDim[Double](d, d)
-    def fill(i: Int, j: Int, cij: BigDecimal, si: BigDecimal, sj: BigDecimal): Unit = {
-      val num = BigDecimal(n) * cij - si * sj
+    for (i <- 0 until d; j <- i until d) {
+      val num = BigDecimal(n) * flat(graft.expr.VecOuterAgg.triOff(d, i, j)) -
+        flat(1 + i) * flat(1 + j)
       cov(i)(j) = r12(num.toDouble / (nD * nD * 1e12))
-      cov(j)(i) = cov(i)(j) // exact mirror of the symmetric Gram
+      cov(j)(i) = cov(i)(j)
     }
-    if (graft.expr.VecOuterAgg.longSafe(n, qAbs) && d <= 1024) {
-      // the d-gate mirrors VecOuterAgg's own require: an oversized dim
-      // must fall through to the decimal explode path (which handles any
-      // d), not throw from the aggregate's constructor (r16 advice)
-      // LONG FAST PATH (probe-gated, the kmeansLloyd doctrine): sums and
-      // all upper-triangle cells in ONE tight-loop aggregate pass —
-      // under the probe bound long sums ARE the decimal(38,0) sums
-      // (integer arithmetic, order-free), so cov is byte-identical to
-      // the explode formulation below. The explode path generates n·d²
-      // rows through two posexplodes + a hash aggregate for n·d(d+1)/2
-      // multiply-adds of real work; this does the multiply-adds and
-      // nothing else.
-      val flat = base.select(kcol(graft.expr.VecOuterAgg(
-          kexp(col("__q")), d).toAggregateExpression()).as("m"))
-        .head().getSeq[Long](0)
-      base.unpersist(false)
-      for (i <- 0 until d; j <- i until d)
-        fill(i, j, BigDecimal(flat(graft.expr.VecOuterAgg.triOff(d, i, j))),
-          BigDecimal(flat(1 + i)), BigDecimal(flat(1 + j)))
-    } else {
-      // decimal explode fallback — exact at ANY scale; j ≥ i only (the
-      // Gram matrix is symmetric, the mirror is reconstructed exactly:
-      // the sum over rows of xᵢ·xⱼ IS the sum of xⱼ·xᵢ)
-      val sums = base.select(posexplode(col("__q")).as(Seq("i", "xv")))
-        .groupBy(col("i")).agg(sum(dec(col("xv"))).as("s"))
-        .collect().map(r => r.getInt(0) -> BigDecimal(r.getDecimal(1))).toMap
-      val cells = base
-        .select(posexplode(col("__q")).as(Seq("i", "xi")), col("__q"))
-        .select(col("i"), col("xi"), posexplode(col("__q")).as(Seq("j", "xj")))
-        .where(col("j") >= col("i"))
-        .groupBy(col("i"), col("j"))
-        .agg(sum(dec(col("xi")) * dec(col("xj"))).as("cij"))
-        .collect() // bounded: d(d+1)/2 rows under the maxDim contract
-      base.unpersist(false)
-      cells.foreach { r =>
-        val (i, j) = (r.getInt(0), r.getInt(1))
-        fill(i, j, BigDecimal(r.getDecimal(2)), sums(i), sums(j))
-      }
-    }
-    (n, d, cov)
+    cov
   }
 
   // decimal-summed 12dp terms — order-free, the SQL replay's sums
@@ -1644,24 +1618,20 @@ object CorpusStats {
    */
   def embeddingCka(df: DataFrame, xCol: Column, yCol: Column,
       maxDim: Int = 128): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
     def units(c: Column): Column = transform(c,
       v => round(v.cast("double") * lit(1e6), 0).cast("long"))
     val base = df.where(xCol.isNotNull && yCol.isNotNull)
       .select(concat(units(xCol), units(yCol)).as("__z"),
         size(units(xCol)).as("__dx"), size(units(yCol)).as("__dy"))
       .cache()
-    // ONE probe job: n + dim bounds + max |z| (the long-fast-path gate)
+    // ONE probe job: n + dim bounds, checked BEFORE the moment pass
     val pr = base.agg(count(lit(1)),
       max(col("__dx")), min(col("__dx")),
-      max(col("__dy")), min(col("__dy")),
-      coalesce(max(greatest(array_max(col("__z")),
-        -array_min(col("__z")))), lit(0L))).head()
+      max(col("__dy")), min(col("__dy"))).head()
     val n = pr.getLong(0)
     require(n >= 2, "embeddingCka: need at least two vectors")
     val (dxMax, dxMin, dyMax, dyMin) =
       (pr.getInt(1), pr.getInt(2), pr.getInt(3), pr.getInt(4))
-    val zAbs = pr.getLong(5)
     require(dxMax == dxMin && dyMax == dyMin,
       s"embeddingCka: ragged dims x=[$dxMin,$dxMax] y=[$dyMin,$dyMax] — " +
         "mixed dimensionality would zero-fill cells; filter to one dim first")
@@ -1675,47 +1645,10 @@ object CorpusStats {
         s"is n·(2d)² work; raise the bound deliberately")
     def r12(x: Double): Double =
       BigDecimal(x).setScale(12, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val nD = n.toDouble
-    val cov = Array.ofDim[Double](2 * d, 2 * d)
-    def fill(i: Int, j: Int, cij: BigDecimal, si: BigDecimal, sj: BigDecimal): Unit = {
-      val num = BigDecimal(n) * cij - si * sj
-      cov(i)(j) = r12(num.toDouble / (nD * nD * 1e12))
-      cov(j)(i) = cov(i)(j) // exact mirror of the symmetric Gram
-    }
-    if (graft.expr.VecOuterAgg.longSafe(n, zAbs) && 2 * d <= 1024) {
-      // d2-gate: see covCells — oversized dims take the decimal path
-      // LONG FAST PATH (probe-gated — the covCells doctrine): all three
-      // Gram blocks' sums and cells in ONE tight-loop aggregate pass over
-      // the concatenated 2d vector; long sums == decimal sums under the
-      // probe bound, so cov is byte-identical to the explode fallback
-      val d2 = 2 * d
-      val flat = base.select(kcol(graft.expr.VecOuterAgg(
-          kexp(col("__z")), d2).toAggregateExpression()).as("m"))
-        .head().getSeq[Long](0)
-      base.unpersist(false)
-      for (i <- 0 until d2; j <- i until d2)
-        fill(i, j, BigDecimal(flat(graft.expr.VecOuterAgg.triOff(d2, i, j))),
-          BigDecimal(flat(1 + i)), BigDecimal(flat(1 + j)))
-    } else {
-      val sums = base.select(posexplode(col("__z")).as(Seq("i", "zv")))
-        .groupBy(col("i")).agg(sum(dec(col("zv"))).as("s"))
-        .collect().map(r => r.getInt(0) -> BigDecimal(r.getDecimal(1))).toMap
-      // z·zᵀ is SYMMETRIC: aggregating only j ≥ i halves the shuffle; the
-      // mirror cells are reconstructed below with byte-identical values
-      // (the sum over rows of zᵢ·zⱼ IS the sum of zⱼ·zᵢ)
-      val cells = base
-        .select(posexplode(col("__z")).as(Seq("i", "zi")), col("__z"))
-        .select(col("i"), col("zi"), posexplode(col("__z")).as(Seq("j", "zj")))
-        .where(col("j") >= col("i"))
-        .groupBy(col("i"), col("j"))
-        .agg(sum(dec(col("zi")) * dec(col("zj"))).as("cij"))
-        .collect() // bounded: (2d)²/2 rows under the maxDim contract
-      base.unpersist(false)
-      cells.foreach { r =>
-        fill(r.getInt(0), r.getInt(1), BigDecimal(r.getDecimal(2)),
-          sums(r.getInt(0)), sums(r.getInt(1)))
-      }
-    }
+    // all three Gram blocks' sums and cells in ONE pass over the
+    // concatenated 2d vector
+    val cov = centeredCells(base, "__z", n, 2 * d)
+    base.unpersist(false)
     def decSum(terms: Iterator[Double]): Double =
       terms.foldLeft(BigDecimal(0))((a, t) =>
         a + BigDecimal(t).setScale(12, BigDecimal.RoundingMode.HALF_UP))

@@ -330,16 +330,40 @@ class DistDriftSpec extends SparkSpec {
     assert(t.getLong(0) == 4)
     // zero-variance side: undefined, publishes NULL not NaN
     assert(rho(Seq((1.0, 5.0), (2.0, 5.0), (3.0, 5.0))).isNullAt(1))
-    // long moment path == decimal path byte-for-byte on the same data
-    // (the probe elects longs whenever 4n³ < 2⁶²; the spec hook forces
-    // the decimal path so both run on identical input, ties included)
+    // against a driver-side BigInt Spearman on tied data: doubled
+    // average ranks A = 2·below + ties + 1, exact integer moments less
+    // n(n+1)², the two sqrts taken separately, 6dp HALF_UP
     val mixed = Seq((1.0, 2.0), (1.0, 7.0), (3.0, 7.0), (4.0, 1.0),
       (4.0, 4.0), (9.0, 9.0), (2.0, 2.0))
-    val fast = DistDrift.spearman(mixed.toDF("x", "y"), col("x"), col("y"))
-      .head()
-    val dec = DistDrift.spearman(mixed.toDF("x", "y"), col("x"), col("y"),
-      forceDecimalPath = true).head()
-    assert(fast == dec)
+    def doubledRanks(v: Seq[Double]): Seq[BigInt] =
+      v.map(x => BigInt(2 * v.count(_ < x) + v.count(_ == x) + 1))
+    val (ax, ay) = (doubledRanks(mixed.map(_._1)), doubledRanks(mixed.map(_._2)))
+    val n = BigInt(mixed.size)
+    def moment(a: Seq[BigInt], b: Seq[BigInt]): Double =
+      (a.zip(b).map { case (p, q) => p * q }.sum - n * (n + 1) * (n + 1)).toDouble
+    val want = BigDecimal(moment(ax, ay) /
+        (math.sqrt(moment(ax, ax)) * math.sqrt(moment(ay, ay))))
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val got = rho(mixed)
+    assert(got.getLong(0) == mixed.size && got.getDouble(1) == want,
+      s"$got vs $want")
+  }
+
+  test("withPrefixSumsInfo: grouped by a nullable integer, a null group keeps its rows") {
+    // group keys keep their own type, and the offsets join null-safely —
+    // the same groups the bucket totals' groupBy builds
+    val perValue = Seq((Some(1), 1.0, 2L), (Some(1), 3.0, 1L),
+      (None, 2.0, 5L), (None, 4.0, 1L), (Some(2), 1.0, 3L))
+      .toDF("g", "v", "t")
+    val info = DistDrift.withPrefixSumsInfo(perValue, Seq("t"),
+      groupCols = Seq("g"))
+    val got = info.df.select(col("g"), col("v"), col("t_below")).collect()
+      .map(r => (Option(r.get(0)), r.getDouble(1), r.getLong(2))).toSet
+    assert(got == Set((Some(1), 1.0, 0L), (Some(1), 3.0, 2L),
+      (None, 2.0, 0L), (None, 4.0, 5L), (Some(2), 1.0, 0L)))
+    assert(info.perGroupTotals == Map(Seq(1) -> Map("t" -> 3L),
+      Seq(null) -> Map("t" -> 6L), Seq(2) -> Map("t" -> 3L)))
+    assert(info.totals == Map("t" -> 12L) && info.nDistinct == 5L)
   }
 
   test("jensenShannon: 0 for identical, ln2 for disjoint, hand-checked mix") {

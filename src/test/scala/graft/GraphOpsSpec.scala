@@ -66,10 +66,14 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("Association.pairs: mega-basket guard is loud") {
-    val bi = (0 until 40).map(i => (1, s"i$i")).toDF("bk", "it")
-    intercept[IllegalArgumentException] {
+    val bi = ((0 until 40).map(i => (17, s"i$i")) ++
+      (0 until 5).map(i => (3, s"i$i"))).toDF("bk", "it")
+    val e = intercept[IllegalArgumentException] {
       Association.pairs(bi, "bk", "it", maxItemsPerBasket = 10).collect()
     }
+    // the refusal names the densest basket, not just its size
+    assert(e.getMessage.contains("densest basket 17 holds 40 items"),
+      e.getMessage)
   }
 
   test("pageRankFixed: hand-checked star graph, partition-independent") {

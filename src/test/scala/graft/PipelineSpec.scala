@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -1852,50 +1852,68 @@ class PipelineSpec extends SparkSpec {
       topK = 2).count() == 2L)
   }
 
-  test("VecOuterAgg long fast path == decimal explode moments; fallback regime exact") {
+  test("VecOuterAgg == decimal explode reference; sums past 2^63 exact") {
     import spark.implicits._
     import graft.functions.GraftFunctions.{kcol, kexp}
-    // the covCells/embeddingCka fast path's core claim: under the probe
-    // bound, the one-pass long aggregate reproduces the explode
-    // formulation's n / per-axis sums / product cells EXACTLY
+    // the reference: the posexplode⋈posexplode DECIMAL(38,0) formulation
+    // covCells/embeddingCka ran before the kernel — n, per-axis sums and
+    // the j ≥ i product cells, each an exact decimal sum
+    def check(base: DataFrame, d: Int): Unit = {
+      def dec(c: Column): Column = c.cast("decimal(38,0)")
+      val flat = base.select(kcol(graft.expr.VecOuterAgg(kexp(col("__q")), d)
+        .toAggregateExpression()).as("m")).head()
+        .getSeq[java.math.BigDecimal](0).map(BigDecimal(_))
+      assert(flat.length == graft.expr.VecOuterAgg.cells(d))
+      assert(flat(0) == BigDecimal(base.count()))
+      val sums = base.select(posexplode(col("__q")).as(Seq("i", "x")))
+        .groupBy("i").agg(sum(dec(col("x"))).as("s")).collect()
+        .map(r => r.getInt(0) -> BigDecimal(r.getDecimal(1))).toMap
+      (0 until d).foreach(i => assert(flat(1 + i) == sums(i), s"sum $i"))
+      val cells = base
+        .select(posexplode(col("__q")).as(Seq("i", "xi")), col("__q"))
+        .select(col("i"), col("xi"), posexplode(col("__q")).as(Seq("j", "xj")))
+        .where(col("j") >= col("i"))
+        .groupBy("i", "j")
+        .agg(sum(dec(col("xi")) * dec(col("xj"))).as("c"))
+        .collect()
+      assert(cells.length == d * (d + 1) / 2)
+      cells.foreach { r =>
+        val (i, j) = (r.getInt(0), r.getInt(1))
+        assert(flat(graft.expr.VecOuterAgg.triOff(d, i, j)) ==
+          BigDecimal(r.getDecimal(2)), s"cell ($i,$j)")
+      }
+    }
     val d = 16
-    val base = engine.table("embeddings").limit(300)
+    val emb = engine.table("embeddings").limit(300)
       .select(transform(col("embedding"),
         v => round(v.cast("double") * lit(1e6), 0).cast("long")).as("__q"))
       .select(slice(col("__q"), 1, d).as("__q")).cache()
-    val flat = base.select(kcol(graft.expr.VecOuterAgg(kexp(col("__q")), d)
-      .toAggregateExpression()).as("m")).head().getSeq[Long](0)
-    val n = base.count()
-    assert(flat(0) == n)
-    val sums = base.select(posexplode(col("__q")).as(Seq("i", "x")))
-      .groupBy("i").agg(sum(col("x")).as("s")).collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    (0 until d).foreach(i => assert(flat(1 + i) == sums(i), s"sum $i"))
-    val cells = base
-      .select(posexplode(col("__q")).as(Seq("i", "xi")), col("__q"))
-      .select(col("i"), col("xi"), posexplode(col("__q")).as(Seq("j", "xj")))
-      .where(col("j") >= col("i"))
-      .groupBy("i", "j")
-      .agg(sum(col("xi").cast("decimal(38,0)") * col("xj").cast("decimal(38,0)")).as("c"))
-      .collect()
-    base.unpersist(false)
-    cells.foreach { r =>
-      val (i, j) = (r.getInt(0), r.getInt(1))
-      assert(BigDecimal(flat(graft.expr.VecOuterAgg.triOff(d, i, j))) ==
-        BigDecimal(r.getDecimal(2)), s"cell ($i,$j)")
-    }
-    // the probe gate itself
-    assert(graft.expr.VecOuterAgg.longSafe(1000000L, 2000000L)) // 4e24 < 2^62? no —
-    // 1e6 rows at |q|=2e6: n·q² = 4e18 < 4.6e18 → safe (tight)
-    assert(!graft.expr.VecOuterAgg.longSafe(2000000L, 2000000L)) // 8e18 → unsafe
-    // fallback regime end-to-end: values big enough that n·q² overflows
-    // long (|q| = 2.912e9 units) must still read EXACT spectra through
-    // the decimal explode path — λ₁ = (2912·10⁶)²/10¹² = 2912² exactly
+    check(emb, d)
+    emb.unpersist(false)
+    // partial sums past 2⁶³ on every kind of cell: axis sums below
+    // Long.MinValue and above Long.MaxValue, squares up to 2¹²⁶, cross
+    // products of both signs — all inside DECIMAL(38,0)
+    val wide = Seq(
+      Seq(Long.MinValue, 3000000000000000000L, -1L),
+      Seq(5L, -3000000000000000000L, Long.MaxValue),
+      Seq(-(1L << 31), 1L << 62, 1L << 31)).toDF("__q").repartition(3)
+    check(wide, 3)
+    // end to end at |q| = 2.912e9 units (n·q² past 2⁶³): exact spectra,
+    // λ₁ = (2912·10⁶)²/10¹² = 2912² exactly
     val big = Seq(Array(2912f, 0f), Array(-2912f, 0f))
       .map(Tuple1(_)).toDF("v")
     val r = graft.pipeline.CorpusStats.embeddingTopComponent(big, "v").head()
     assert(r.getAs[Double]("lambda1") == 2912.0 * 2912.0)
     assert(r.getAs[Double]("top_share") == 1.0)
+    // every d ≤ maxDim has a path: 2d = 1026 cells per side of the CKA
+    // concat (the kernel has no dimension cap of its own)
+    val wideDim = 513
+    val vecs = Seq(0, 1, 2).map(k =>
+      Tuple1(Array.tabulate(wideDim)(i => if (i % 3 == k) 1f + k else 0f)))
+      .toDF("v")
+    val cka = graft.pipeline.CorpusStats.embeddingCka(vecs, col("v"), col("v"),
+      maxDim = wideDim).head()
+    assert(cka.getAs[Long]("dim") == wideDim && cka.getAs[Double]("cka") == 1.0)
   }
 
   test("embeddingCka: identity/rotation/scale read 1.0, guards refuse") {

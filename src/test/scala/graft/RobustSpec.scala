@@ -104,6 +104,19 @@ class RobustSpec extends SparkSpec {
     assert(flat.getAs[Double]("mad") == 0.0
       && flat.getAs[Double]("huber_mean") == 7.0)
   }
+  test("huberMean: a deviation past 2⁶³ fails loudly, never publishes") {
+    import spark.implicits._
+    // lower median −5e18, so |5e18 − med| = 1e19 leaves the long range:
+    // the executor-side abs(v − med) throws ARITHMETIC_OVERFLOW (ANSI)
+    // before the MAD bucket bound derived on the driver can shape any
+    // answer
+    val df = Seq(-5000000000000000000L, -5000000000000000000L,
+      5000000000000000000L).toDF("x")
+    val e = intercept[Exception](Outliers.huberMean(df, col("x")).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("ARITHMETIC_OVERFLOW")),
+      e.toString)
+  }
   test("seasonalMannKendall: within-season trends combine; cross-season cycle reads 0") {
     import spark.implicits._
     def run(rows: Seq[(String, Long, Long)]) =

@@ -16,7 +16,9 @@ class VerifySerialSpec extends AnyFunSuite {
     val full = java.nio.file.Files.readString(src.toPath)
     // scan only the queries map — the trailing oracleSql SQL strings
     // would otherwise be swallowed into the last entry's chunk
-    val text = full.substring(0, full.indexOf("def oracleSql"))
+    val cut = full.indexOf("lazy val oracleSql")
+    assert(cut > 0, "oracleSql declaration not found — scan broken?")
+    val text = full.substring(0, cut)
     // no trailing `{`: a single-expression gate (`-> ((s, dir) => expr)`)
     // must start its own chunk, not be swallowed into the previous one
     val entry = """"(q\d+[a-z0-9_]*)" -> \(\(s, dir\) =>""".r
